@@ -207,16 +207,17 @@ class SparkDiGraph:
                 F.lit(float(default_length)).alias("length"),
             )
         else:
-            vdf = endpoint_ids.join(vertices, "id", "left").select(
+            # endpoint rows and extra (edge-less) vertex rows fill a NULL
+            # name or length alike
+            proj = (
                 "id",
                 F.coalesce(F.col("node"), F.col("id").cast("string")).alias("node"),
                 F.coalesce(F.col("length"), F.lit(float(default_length)))
                 .cast("double")
                 .alias("length"),
             )
-            extra = vertices.join(endpoint_ids, "id", "left_anti").select(
-                "id", "node", F.col("length").cast("double")
-            )
+            vdf = endpoint_ids.join(vertices, "id", "left").select(*proj)
+            extra = vertices.join(endpoint_ids, "id", "left_anti").select(*proj)
             vdf = vdf.unionByName(extra)
         return cls(spark, vdf, edges, round_n=round_n)
 

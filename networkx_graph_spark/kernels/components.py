@@ -81,9 +81,8 @@ def connected_components(
     if algorithm == "blocked":
         if runner is not None or resume:
             raise ValueError(
-                "algorithm='blocked' does not support runner/resume — its "
-                "supersteps run inside bounded_sssp_csr, outside the "
-                "SuperstepRunner checkpoint protocol; use hashmin/twophase "
+                "algorithm='blocked' does not support runner/resume — the "
+                "block relax takes no durable checkpoints; use hashmin/twophase "
                 "for resumable runs"
             )
         return _cc_blocked(edges, max_iter, num_partitions)
@@ -102,7 +101,8 @@ def _cc_blocked(edges, max_iter, num_partitions, block_width: int = 1024):
     (the high-diameter lever; twophase remains the O(log n) default).
     Float labels are exact: ids are integers < 2^53.
     """
-    from ..operators.sssp_csr import NEG_INF, bounded_sssp_csr
+    from ..operators.sssp import NEG_INF
+    from ..operators.sssp_csr import SSSP_BLOCK, csr_fixpoint
 
     spark = edges.sparkSession
     if num_partitions is None:
@@ -121,20 +121,18 @@ def _cc_blocked(edges, max_iter, num_partitions, block_width: int = 1024):
         F.lit(NEG_INF).alias("prev_dist"),
     )
     ew = sym.select("src", "dst", F.lit(0.0).alias("weight"))
-    state, converged, iters = bounded_sssp_csr(
-        spark, ew, seeds, cutoff=float("inf"),
-        num_blocks=num_partitions, block_width=block_width, max_iter=max_iter,
-        return_info=True,
+    res = csr_fixpoint(
+        spark, ew, seeds, SSSP_BLOCK, float("inf"), num_partitions, block_width, max_iter
     )
-    if not converged:
+    if not res.converged:
         raise RuntimeError(
             f"blocked CC did not reach the fixpoint in max_iter={max_iter} "
             "supersteps — components would be wrong; raise max_iter"
         )
-    out = state.select(
+    out = res.state.select(
         F.col("node").alias("id"), F.col("dist").cast("long").alias("component")
     )
-    return SuperstepResult(state=out, iterations=iters, converged=True, metrics=[])
+    return SuperstepResult(state=out, iterations=res.iterations, converged=True, metrics=[])
 
 
 def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):

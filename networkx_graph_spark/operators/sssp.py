@@ -1,18 +1,28 @@
-"""Bounded multi-source shortest-path kernel + the reference query surface.
+"""The label-correcting fixpoint core, bounded multi-source shortest paths
+over it, and the reference query surface.
 
 The reference kernel is a sequential Fibonacci-heap Dijkstra
 (/root/reference/src/main.cpp:1101-1165). Heap ordering is a sequential
 optimization only — a label-correcting (Bellman-Ford-style) frontier
-iteration converges to the *identical* distance map, so the Spark-native
-kernel is a superstep loop of
+iteration converges to the *identical* distance map. ``label_fixpoint`` is
+the package's one such iteration, a superstep loop of
 
-    frontier ⋈ edges_w  →  min-merge into state  →  new frontier
+    frontier → relax → min(struct(key)) per id → full-outer merge (_new)
 
-over a state DataFrame ``(qid, node, dist, prev, prev_dist)``. ``qid``
-makes the kernel *multi-query from the start*: a batch of point/SSSP
-queries (or the UBODT build, which seeds every vertex) advances in one
-Spark job instead of |Q| sequential Dijkstras — this is where the Spark
-design beats the reference's (stubbed) parallelism
+Its callers supply only the id columns, the tie-break key and the relax
+function (frontier → candidate labels):
+
+- ``bounded_sssp``: ids ``(qid, node)``, key ``(dist, prev_dist, prev,
+  *payload)``, relax = join with ``edges_w``;
+- ``operators.zigzag.zigzag_sssp``: ids ``node`` over doubled states, key
+  ``(dist, g, prev)``, relax = join with the state edges;
+- ``operators.sssp_csr``: either label, relax = a block-local fixpoint per
+  CSR edge block (``bounded_sssp_csr``, ``zigzag_sssp_csr`` and blocked CC).
+
+``qid`` makes ``bounded_sssp`` *multi-query from the start*: a batch of
+point/SSSP queries (or the UBODT build, which seeds every vertex) advances
+in one Spark job instead of |Q| sequential Dijkstras — this is where the
+Spark design beats the reference's (stubbed) parallelism
 (/root/reference/src/main.cpp:990-994).
 
 Exact-match semantics replicated:
@@ -44,26 +54,151 @@ partial.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import (
+    Materializer,
+    SuperstepResult,
+    SuperstepRunner,
+    _free_checkpoint,
+)
 from ..rounding import clip, round_half_up
 
 NEG_INF = float("-inf")
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("qid", T.LongType(), False),
-        T.StructField("node", T.LongType(), False),
-        T.StructField("dist", T.DoubleType(), False),
-        T.StructField("prev", T.LongType(), False),
-        T.StructField("prev_dist", T.DoubleType(), False),
-    ]
-)
+# bounded_sssp's state: ids, tie-break key and column order
+SSSP_IDS = ("qid", "node")
+SSSP_KEY = ("dist", "prev_dist", "prev")
+SSSP_COLS = ("qid", "node", "dist", "prev", "prev_dist")
+# payload columns ride in the state and the message projection, so they
+# may not shadow the state, its frontier flag or the edge/cutoff columns
+_RESERVED = {*SSSP_IDS, *SSSP_KEY, "_new", "src", "dst", "weight", "cutoff"}
+
+
+def label_fixpoint(
+    spark: SparkSession,
+    init: DataFrame,
+    ids: Sequence[str],
+    key: Sequence[str],
+    relax: Callable[[DataFrame, int], DataFrame],
+    max_iter: int = 10_000,
+    watch: Optional[DataFrame] = None,
+    on_watch: Optional[Callable[[list[Row]], None]] = None,
+    runner=None,
+    name: str = "fixpoint",
+    resume: bool = False,
+) -> SuperstepResult:
+    """Run a label-correcting relaxation to its least fixpoint.
+
+    Parameters
+    ----------
+    init  : (ids..., key...) — the seed labels, the first frontier
+    ids   : id columns; the state holds one label per id
+    key   : label columns, ordered lexicographically as a struct — the
+        tie-break; the least label per id wins
+    relax : ``(frontier, i) -> candidates`` — frontier holds the
+        (ids..., key...) rows that improved in superstep ``i - 1`` (the
+        seeds at ``i == 0``); candidates are (ids..., key...) rows
+    watch : (ids...) or None — ids whose labels ``on_watch(rows)`` hears
+        about: once with every label they hold when the loop starts (fresh
+        or resumed), then with each label they improve to in a superstep;
+        rows are (ids..., key...)
+    runner : ``SuperstepRunner``; with bucketed checkpoints
+        (``bucket_cols == ids``) the bucketed write is the superstep action
+
+    Each superstep keeps per id the least of the old label and the
+    candidates' minimum in ONE full-outer merge of the state with the
+    candidate minima — kept rows where the old struct wins or no candidate
+    exists, replaced/new rows where the candidate strictly wins. The
+    state's ``_new`` flag marks the latter: they are the next frontier.
+
+    Job budget: exactly ONE Spark job per superstep, plus the seed
+    checkpoint. The improved-row count (convergence) and the watched
+    labels are ``Observation`` metrics collected as side effects of the
+    single state checkpoint action.
+
+    Returns the runner's ``SuperstepResult``; its state is
+    (ids..., key..., _new).
+    """
+    ids, key = list(ids), list(key)
+    runner = runner or SuperstepRunner(spark)
+    durable = runner.wants_step_persist()
+    if durable and runner.bucket_cols != ids:
+        raise ValueError(
+            f"durable co-partitioned {name} needs bucket_cols={ids} "
+            f"(got {runner.bucket_cols})"
+        )
+    mat = Materializer()
+    mark = None
+    if watch is not None:
+        mark = F.broadcast(watch.select(*ids).withColumn("_watch", F.lit(True)))
+    started = False
+
+    # Loop-invariant plan fragments, built once (same driver-latency lever
+    # as the PageRank kernel: Column expressions are immutable and resolve
+    # by name, so rebuilding them per superstep only pays py4j/Catalyst
+    # construction time again).
+    _cand_agg = F.min(F.struct(*key)).alias("_cand")
+    _old_proj = (*ids, F.struct(*key).alias("_old"))
+    _better = F.col("_cand").isNotNull() & (
+        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
+    )
+    _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
+    _state_proj = (*ids, *[F.col(f"_m.{c}").alias(c) for c in key], "_new")
+    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt")
+    _watch_metric = F.collect_list(
+        F.when(F.col("_watch") & F.col("_new"), F.struct(*ids, *key))
+    ).alias("watched")
+
+    def step(state: DataFrame, i: int):
+        nonlocal started
+        if mark is not None and not started:
+            on_watch(state.join(mark, ids).select(*ids, *key).collect())
+        started = True
+        frontier = state.filter(F.col("_new")).select(*ids, *key)
+        best = relax(frontier, i).groupBy(*ids).agg(_cand_agg)
+        new_state = (
+            state.select(*_old_proj)
+            .join(best, ids, "full")
+            .withColumn("_m", _merge)
+            .withColumn("_new", _better)
+            .select(*_state_proj)
+        )
+        obs = Observation()
+        metric_exprs = [_cnt_metric]
+        if mark is not None:
+            new_state = new_state.join(mark, ids, "left")
+            metric_exprs.append(_watch_metric)
+        observed = new_state.observe(obs, *metric_exprs).select(*ids, *key, "_new")
+        if durable:
+            # bucketed write = the superstep action (metrics ride it; the
+            # read-back keeps hashpartitioning(ids)); pre-cluster on the
+            # bucket cols per persist_state's contract so each task writes
+            # exactly one bucket file (not tasks x buckets smalls)
+            observed = observed.repartition(runner.bucket_count, *ids)
+            out_state = runner.persist_state(observed, name, i)
+        else:
+            out_state = mat.materialize(observed)
+        if i == 0:
+            # the runner's init checkpoint isn't Materializer-tracked;
+            # free it now that the first round's state is self-contained
+            # (no-op for a parquet-resumed state)
+            _free_checkpoint(state)
+        got = obs.get
+        if mark is not None:
+            on_watch(got["watched"])
+        return out_state, {"cnt": got["cnt"], "_checkpointed": True, "_durable": durable}
+
+    init = init.select(*ids, *key).withColumn("_new", F.lit(True))
+    result = runner.run(
+        name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
+    )
+    mat.release()
+    return result
 
 
 def bounded_sssp(
@@ -79,7 +214,9 @@ def bounded_sssp(
     name: str = "sssp",
     resume: bool = False,
 ) -> DataFrame:
-    """Run the label-correcting relaxation to fixpoint.
+    """Bounded multi-source SSSP: ``label_fixpoint`` over ``(qid, node)``
+    with the ``(dist, prev_dist, prev)`` tie-break and an ``edges_w`` join
+    as the relax.
 
     Parameters
     ----------
@@ -101,56 +238,29 @@ def bounded_sssp(
 
     Returns the converged state (qid, node, dist, prev, prev_dist [, payload]).
 
-    Job budget: exactly ONE Spark job per superstep. The state carries a
-    ``_new`` frontier flag; the improved-row count (emptiness/convergence)
-    and the per-query target hits (p2p early termination) are
-    ``Observation`` metrics collected as side effects of the single state
-    checkpoint action — no separate ``isEmpty``/frontier checkpoint/target
-    ``collect`` jobs (the same 1-job/superstep pattern as the PageRank and
-    CC kernels).
-
     Durability (north rule): pass a ``SuperstepRunner`` with a
     ``checkpoint_dir`` (optionally ``bucket_cols=["qid", "node"]`` for
     co-partitioned bucketed checkpoints) plus ``name``/``resume`` to make
     long fixpoints — the UBODT build seeds EVERY vertex — resumable
-    mid-iteration with per-superstep metrics/lineage; ``tbest`` for p2p
-    early termination is recomputed from the loaded state on resume.
+    mid-iteration with per-superstep metrics/lineage; the best target
+    distances for p2p early termination are re-read from the loaded state
+    on resume.
     """
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer, SuperstepRunner, _free_checkpoint
-
     pl = list(payload_cols)
-    # the hoisted name-resolved message projection below requires payload
-    # names disjoint from the edge columns (they always were in spirit —
-    # the seeds schema is (qid, node, dist, prev, prev_dist, payload...))
-    _reserved = {"src", "dst", "weight", "cutoff"}
-    if _reserved & set(pl):
-        raise ValueError(f"payload_cols may not use reserved names {_reserved}")
-    key = ["dist", "prev_dist", "prev", *pl]
-    cols = ["qid", "node", "dist", "prev", "prev_dist", *pl]
-    runner = runner or SuperstepRunner(spark)
-    durable = runner.wants_step_persist()
-    if durable and runner.bucket_cols != ["qid", "node"]:
+    if _RESERVED & set(pl):
         raise ValueError(
-            "durable co-partitioned SSSP needs bucket_cols=['qid', 'node'] "
-            f"(got {runner.bucket_cols})"
+            f"payload_cols may not use reserved names {sorted(_RESERVED)}"
         )
-    mat = Materializer()
     tbest: dict[int, float] = {}
-    tb_seeded = {"done": False}
-    tmark = None
-    if targets is not None:
-        tmark = F.broadcast(
-            targets.select("qid", "node").withColumn("_is_tgt", F.lit(True))
-        )
-    init = seeds.select(*cols).withColumn("_new", F.lit(True))
 
-    # Loop-invariant plan fragments, built once (same driver-latency lever
-    # as the PageRank kernel: Column expressions are immutable and resolve
-    # by name, so rebuilding them per superstep only pays py4j/Catalyst
-    # construction time again). Names are unambiguous in every join below
-    # (state: qid/node/dist/prev/prev_dist/payload; edges: src/dst/weight).
+    def on_watch(rows: list[Row]) -> None:
+        for r in rows:
+            q, d = r["qid"], r["dist"]
+            if q not in tbest or d < tbest[q]:
+                tbest[q] = d
+
+    # loop-invariant message fragments; names are unambiguous in the join
+    # (frontier: qid/node/dist/payload; edges: src/dst/weight)
     _fsel_cols = ("qid", "node", "dist", *pl)
     _msg_jcond = F.col("node") == F.col("src")
     _msg_proj = (
@@ -167,33 +277,9 @@ def bounded_sssp(
     else:
         _cut_filter = F.col("dist") <= F.col("cutoff")
         _cut_bcast = F.broadcast(cutoffs)
-    _cand_agg = F.min(F.struct(*key)).alias("_cand")
-    _old_proj = ("qid", "node", F.struct(*key).alias("_old"))
-    _better = F.col("_cand").isNotNull() & (
-        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
-    )
-    _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
-    _state_proj = (
-        "qid",
-        "node",
-        *[F.col(f"_m.{c}").alias(c) for c in key],
-        "_new",
-    )
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt")
-    _hits_metric = F.collect_list(
-        F.when(F.col("_is_tgt") & F.col("_new"), F.struct("qid", "dist"))
-    ).alias("hits")
 
-    def step(state: DataFrame, i: int):
-        if targets is not None and not tb_seeded["done"]:
-            # first step (fresh or resumed): seed tbest from current state
-            for r in state.join(F.broadcast(targets), ["qid", "node"]).groupBy(
-                "qid"
-            ).agg(F.min("dist").alias("d")).collect():
-                tbest[r["qid"]] = r["d"]
-            tb_seeded["done"] = True
-        frontier = state.filter(F.col("_new")).select(*cols)
-        if targets is not None and tbest and i > 0:
+    def relax(frontier: DataFrame, i: int) -> DataFrame:
+        if tbest and i > 0:
             # prune frontier rows strictly above their query's best target
             # distance (reference first-pop semantics, see docstring); the
             # seed frontier (i == 0) is never pruned (parity with pre-loop
@@ -202,66 +288,27 @@ def bounded_sssp(
             frontier = frontier.join(F.broadcast(tb), "qid", "left").filter(
                 F.col("_tbest").isNull() | (F.col("dist") <= F.col("_tbest"))
             ).drop("_tbest")
-        f = frontier
         if sinks is not None:
-            f = f.join(F.broadcast(sinks), ["qid", "node"], "left_anti")
-        msgs = f.select(*_fsel_cols).join(edges_w, _msg_jcond).select(*_msg_proj)
+            frontier = frontier.join(F.broadcast(sinks), ["qid", "node"], "left_anti")
+        msgs = frontier.select(*_fsel_cols).join(edges_w, _msg_jcond).select(*_msg_proj)
         if _cut_bcast is None:
-            msgs = msgs.filter(_cut_filter)
-        else:
-            msgs = msgs.join(_cut_bcast, "qid").filter(_cut_filter).drop("cutoff")
-        # Single full-outer merge of old state vs candidate minima: the
-        # previous shape (left-join to find improvements, anti-join to
-        # drop replaced rows, union back) walked the state three times
-        # with two (qid, node) joins per superstep; one full-outer join
-        # computes the identical row set — kept rows where the old
-        # tie-break struct wins or no candidate exists (_new false),
-        # updated/new rows where the candidate struct strictly wins
-        # (_new true).
-        best = msgs.groupBy("qid", "node").agg(_cand_agg)
-        new_state = (
-            state.select(*_old_proj)
-            .join(best, ["qid", "node"], "full")
-            .withColumn("_m", _merge)
-            .withColumn("_new", _better)
-            .select(*_state_proj)
-        )
-        obs = Observation()
-        metric_exprs = [_cnt_metric]
-        if targets is not None:
-            new_state = new_state.join(tmark, ["qid", "node"], "left")
-            metric_exprs.append(_hits_metric)
-        observed = new_state.observe(obs, *metric_exprs).select(*cols, "_new")
-        if durable:
-            # bucketed write = the superstep action (metrics ride it; the
-            # read-back keeps hashpartitioning(qid, node)); pre-cluster on
-            # the bucket cols per persist_state's contract so each task
-            # writes exactly one bucket file (not tasks x buckets smalls)
-            observed = observed.repartition(
-                runner.bucket_count, *runner.bucket_cols
-            )
-            out_state = runner.persist_state(observed, name, i)
-        else:
-            out_state = mat.materialize(observed)
-        if i == 0:
-            # the runner's init checkpoint isn't Materializer-tracked;
-            # free it now that the first round's state is self-contained
-            # (no-op for a parquet-resumed state)
-            _free_checkpoint(state)
-        got = obs.get
-        if targets is not None:
-            for h in got["hits"]:
-                q, d = h["qid"], h["dist"]
-                if q not in tbest or d < tbest[q]:
-                    tbest[q] = d
-        return out_state, {"cnt": got["cnt"], "_checkpointed": True, "_durable": durable}
+            return msgs.filter(_cut_filter)
+        return msgs.join(_cut_bcast, "qid").filter(_cut_filter).drop("cutoff")
 
-    result = runner.run(
-        name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
+    result = label_fixpoint(
+        spark,
+        seeds,
+        SSSP_IDS,
+        [*SSSP_KEY, *pl],
+        relax,
+        max_iter=max_iter,
+        watch=targets,
+        on_watch=on_watch,
+        runner=runner,
+        name=name,
+        resume=resume,
     )
-    out = result.state.select(*cols)
-    mat.release()
-    return out
+    return result.state.select(*SSSP_COLS, *pl)
 
 
 def backtrace(
@@ -280,10 +327,6 @@ def backtrace(
     (prev-order; callers reverse for forward paths). Iterative join — the
     loop count is the longest chain, bounded by the cutoff.
     """
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
     def _pending_obs(df):
         obs = Observation()
         return obs, df.observe(

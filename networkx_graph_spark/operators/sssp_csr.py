@@ -1,11 +1,11 @@
-"""CSR-blocked per-partition relaxation: superstep-count reduction.
+"""CSR-blocked relax for the label-correcting fixpoint core.
 
 North-star architecture item (BASELINE.json:6): "iterative kernels
-operate on CSR-blocked adjacency partitions". The plain kernel
+operate on CSR-blocked adjacency partitions". The plain relax
 (operators/sssp.py) advances one hop per superstep; on high-diameter
 graphs the superstep count — not per-superstep cost — dominates.
 
-This variant co-partitions the frontier with the edge blocks by
+The block relax co-partitions the frontier with the edge blocks by
 ``(node // block_width) % P`` and, inside each partition, runs a LOCAL
 label-correcting fixpoint over that block's adjacency held as CSR numpy
 arrays (built per batch from the Arrow columns — no Python-object graph).
@@ -16,144 +16,153 @@ chains ("block-centric" iteration, cf. Giraph++/Blogel), cutting global
 rounds toward the number of block-boundary crossings on the shortest
 path.
 
-Semantics: identical fixpoint and the SAME deterministic tie-break
-struct ``(dist, prev_dist, prev)`` as ``bounded_sssp`` — the local loop
-applies lexicographic-min updates, and the global merge is unchanged, so
-dists AND prevs match the plain kernel exactly (tested).
+Everything else is ``operators.sssp.label_fixpoint``: ``csr_fixpoint``
+hands it the block relax, so the global merge, the tie-break and the job
+budget are the core's. The local loop applies the same lexicographic-min
+updates over the same label (``SSSP_BLOCK``: ``(dist, prev_dist, prev)``;
+``ZIGZAG_BLOCK``: ``(dist, g, prev)``), and the least fixpoint is unique,
+so dists AND prevs match the plain relax exactly (tested).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, NamedTuple, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-NEG_INF = float("-inf")
+from ..plans.supersteps import SuperstepResult
+from .sssp import SSSP_COLS, SSSP_IDS, SSSP_KEY, label_fixpoint
+from .zigzag import ZIGZAG_IDS, ZIGZAG_KEY, zigzag_seeds
 
 
-def _local_relax_factory(num_blocks: int, cutoff: float, block_width: int = 1):
-    """Cogrouped-map fn: (frontier block, edge block) -> improved states
+class BlockLabel(NamedTuple):
+    """A fixpoint state in block form: ``ids``/``key`` as in
+    ``label_fixpoint``, their Arrow ``schema``, the edge columns a label
+    reads and ``extend(label_u, u, *edge) -> label_v`` for one relaxed edge
+    ``u -> v`` (the plain relax's message projection, per edge)."""
+
+    ids: tuple
+    key: tuple
+    schema: str
+    edge_cols: tuple
+    extend: Callable
+
+
+SSSP_BLOCK = BlockLabel(
+    SSSP_IDS,
+    SSSP_KEY,
+    "qid long, node long, dist double, prev_dist double, prev long",
+    ("weight",),
+    lambda lu, u, w: (lu[0] + w, lu[0], u),
+)
+# g resets to 0 on a positive-weight flip edge, else parent g + 1
+ZIGZAG_BLOCK = BlockLabel(
+    ZIGZAG_IDS,
+    ZIGZAG_KEY,
+    "node long, dist double, g int, prev long",
+    ("weight", "is_flip"),
+    lambda lu, u, w, flip: (lu[0] + w, 0 if flip and w > 0 else lu[1] + 1, u),
+)
+
+
+def _local_relax_factory(
+    label: BlockLabel, num_blocks: int, cutoff: float, block_width: int
+):
+    """Cogrouped-map fn: (frontier block, edge block) -> improved labels
     reached through any number of intra-block hops."""
+    n_ids = len(label.ids)
+    cols = [*label.ids, *label.key]
 
     def fn(frontier: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         if frontier.empty or edges.empty:
-            return frontier[["qid", "node", "dist", "prev", "prev_dist"]]
-        esrc = edges["src"].to_numpy()
-        edst = edges["dst"].to_numpy()
-        ew = edges["weight"].to_numpy()
-        order = np.argsort(esrc, kind="stable")
-        esrc, edst, ew = esrc[order], edst[order], ew[order]
+            return frontier[cols]
+        order = np.argsort(edges["src"].to_numpy(), kind="stable")
+        esrc = edges["src"].to_numpy()[order]
+        edst = edges["dst"].to_numpy()[order].tolist()
+        eattr = list(zip(*(edges[c].to_numpy()[order].tolist() for c in label.edge_cols)))
         # CSR over the block's source vertices
         uniq, starts = np.unique(esrc, return_index=True)
         starts = np.append(starts, len(esrc))
         src_pos = {int(s): (int(starts[i]), int(starts[i + 1])) for i, s in enumerate(uniq)}
 
-        out: dict[tuple[int, int], tuple[float, float, int]] = {}
-        work = [
-            (int(q), int(n), float(d), float(pd_), int(p))
-            for q, n, d, p, pd_ in zip(
-                frontier["qid"], frontier["node"], frontier["dist"],
-                frontier["prev"], frontier["prev_dist"],
-            )
-        ]
-        # seed the local best map with the incoming frontier states so
+        # seed the local best map with the incoming frontier labels so
         # intra-block improvements compare against them
-        best: dict[tuple[int, int], tuple[float, float, int]] = {}
-        for q, n, d, pd_, p in work:
-            k = (q, n)
-            cand = (d, pd_, p)
-            if k not in best or cand < best[k]:
-                best[k] = cand
-        stack = list(best.keys())
+        best: dict[tuple, tuple] = {}
+        for row in zip(*(frontier[c].tolist() for c in cols)):
+            k, lab = row[:n_ids], row[n_ids:]
+            if k not in best or lab < best[k]:
+                best[k] = lab
+        out: dict[tuple, tuple] = {}
+        stack = list(best)
         while stack:
-            q, u = stack.pop()
-            du = best[(q, u)][0]
+            k = stack.pop()
+            u = k[-1]
             rng = src_pos.get(u)
             if rng is None:
                 continue
+            lu = best[k]
             for i in range(rng[0], rng[1]):
-                v = int(edst[i])
-                c = du + float(ew[i])
-                if c > cutoff:
+                cand = label.extend(lu, u, *eattr[i])
+                if cand[0] > cutoff:
                     continue
-                k = (q, v)
-                cand = (c, du, u)
-                if k not in best or cand < best[k]:
-                    best[k] = cand
-                    out[k] = cand
+                v = edst[i]
+                kv = (*k[:-1], v)
+                if kv not in best or cand < best[kv]:
+                    best[kv] = cand
+                    out[kv] = cand
                     # only same-block destinations can relax further locally
                     if (v // block_width) % num_blocks == (u // block_width) % num_blocks:
-                        stack.append(k)
+                        stack.append(kv)
 
-        # emit only states set/improved by local relaxation (the incoming
+        # emit only labels set/improved by local relaxation (the incoming
         # frontier is already in the global state)
-        rows = [(q, n, d, p, pd_) for (q, n), (d, pd_, p) in out.items()]
-        return pd.DataFrame(
-            rows, columns=["qid", "node", "dist", "prev", "prev_dist"]
+        return pd.DataFrame([(*k, *lab) for k, lab in out.items()], columns=cols)
+
+    return fn
+
+
+def csr_fixpoint(
+    spark: SparkSession,
+    edges: DataFrame,
+    seeds: DataFrame,
+    label: BlockLabel,
+    cutoff: float,
+    num_blocks: Optional[int],
+    block_width: int,
+    max_iter: int,
+) -> SuperstepResult:
+    """``label_fixpoint`` with the block relax over ``edges`` (src, dst,
+    *label.edge_cols). ``block_width``: ids are blocked by
+    ``(id // block_width) % num_blocks`` — width 1 is a round-robin
+    (hash-like) blocking; a larger width gives RANGE blocking, which is
+    what makes block-centric iteration pay off on graphs whose id
+    assignment preserves locality (crawl-order url ids, dictionary-encoded
+    host-sorted ids): intra-block chains collapse into one superstep."""
+    if num_blocks is None:
+        num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def blk(c: str):
+        return F.pmod(F.floor(F.col(c) / F.lit(block_width)), F.lit(num_blocks))
+
+    eb = edges.select("src", "dst", *label.edge_cols).withColumn("_blk", blk("src"))
+    _frontier_blk = blk("node")
+    fn = _local_relax_factory(label, num_blocks, float(cutoff), block_width)
+
+    def relax(frontier: DataFrame, i: int) -> DataFrame:
+        return (
+            frontier.withColumn("_blk", _frontier_blk)
+            .groupBy("_blk")
+            .cogroup(eb.groupBy("_blk"))
+            .applyInPandas(fn, schema=label.schema)
         )
 
-    return fn
-
-
-def _zigzag_local_relax_factory(num_blocks: int, cutoff: float, block_width: int = 1):
-    """Zigzag variant of the local relaxation: labels are
-    ``(dist, g, prev)`` (operators/zigzag.py tie-break — g resets to 0 on a
-    positive-weight flip edge, else parent g + 1). Monotone label function
-    ⇒ unique least fixpoint ⇒ relaxation order (block-local vs global)
-    cannot change the converged labels."""
-
-    def fn(frontier: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if frontier.empty or edges.empty:
-            return frontier[["node", "dist", "g", "prev"]]
-        esrc = edges["src"].to_numpy()
-        edst = edges["dst"].to_numpy()
-        ew = edges["weight"].to_numpy()
-        eflip = edges["is_flip"].to_numpy()
-        order = np.argsort(esrc, kind="stable")
-        esrc, edst, ew, eflip = esrc[order], edst[order], ew[order], eflip[order]
-        uniq, starts = np.unique(esrc, return_index=True)
-        starts = np.append(starts, len(esrc))
-        src_pos = {int(s): (int(starts[i]), int(starts[i + 1])) for i, s in enumerate(uniq)}
-
-        best: dict[int, tuple[float, int, int]] = {}
-        out: dict[int, tuple[float, int, int]] = {}
-        for n, d, g, p in zip(
-            frontier["node"], frontier["dist"], frontier["g"], frontier["prev"]
-        ):
-            k = int(n)
-            cand = (float(d), int(g), int(p))
-            if k not in best or cand < best[k]:
-                best[k] = cand
-        stack = list(best.keys())
-        while stack:
-            u = stack.pop()
-            du, gu, _ = best[u]
-            rng = src_pos.get(u)
-            if rng is None:
-                continue
-            for i in range(rng[0], rng[1]):
-                v = int(edst[i])
-                w = float(ew[i])
-                c = du + w
-                if c > cutoff:
-                    continue
-                gv = 0 if (eflip[i] and w > 0) else gu + 1
-                cand = (c, gv, u)
-                if v not in best or cand < best[v]:
-                    best[v] = cand
-                    out[v] = cand
-                    if (v // block_width) % num_blocks == (u // block_width) % num_blocks:
-                        stack.append(v)
-        rows = [(n, d, g, p) for n, (d, g, p) in out.items()]
-        return pd.DataFrame(rows, columns=["node", "dist", "g", "prev"])
-
-    return fn
+    return label_fixpoint(
+        spark, seeds, label.ids, label.key, relax, max_iter=max_iter, name="csr"
+    )
 
 
 def zigzag_sssp_csr(
@@ -172,60 +181,11 @@ def zigzag_sssp_csr(
     convergence collapses long 0-cost chains into one superstep.
     block_width defaults to 2 so both states of a node share a block.
     Returns (node=state, dist, g, prev) equal to zigzag_sssp's state."""
-    if num_blocks is None:
-        num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    blk = lambda c: F.pmod(F.floor(F.col(c) / F.lit(block_width)), F.lit(num_blocks))  # noqa: E731
-    eb = state_edges.select("src", "dst", "weight", "is_flip").withColumn("_blk", blk("src"))
-    fn = _zigzag_local_relax_factory(num_blocks, float(cutoff), block_width)
-    schema = "node long, dist double, g int, prev long"
-
-    # one Spark job per superstep (``_new`` flag + Observation count on the
-    # checkpoint action — see bounded_sssp)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
-    cols = ["node", "dist", "g", "prev"]
-    mat = Materializer()
-    state = mat.materialize(
-        spark.createDataFrame([(s, 0.0, 0, -1) for s in seed_states], schema)
-        .withColumn("_new", F.lit(True))
+    result = csr_fixpoint(
+        spark, state_edges, zigzag_seeds(spark, seed_states), ZIGZAG_BLOCK,
+        cutoff, num_blocks, block_width, max_iter,
     )
-    for _ in range(max_iter):
-        frontier = state.filter(F.col("_new")).select(*cols)
-        msgs = (
-            frontier.withColumn("_blk", blk("node"))
-            .groupBy("_blk")
-            .cogroup(eb.groupBy("_blk"))
-            .applyInPandas(fn, schema=schema)
-        )
-        best = (
-            msgs.groupBy("node")
-            .agg(F.min(F.struct("dist", "g", "prev")).alias("m"))
-            .select("node", "m.dist", "m.g", "m.prev")
-        )
-        old = state.select("node", F.struct("dist", "g", "prev").alias("_old"))
-        improved = (
-            best.join(old, "node", "left")
-            .filter(F.col("_old").isNull() | (F.struct("dist", "g", "prev") < F.col("_old")))
-            .select(*cols)
-        )
-        obs = Observation()
-        state = mat.materialize(
-            state.join(improved.select("node"), "node", "left_anti")
-            .select(*cols)
-            .withColumn("_new", F.lit(False))
-            .unionByName(improved.withColumn("_new", F.lit(True)))
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt"),
-            )
-        )
-        if obs.get["cnt"] == 0:
-            break
-    out = state.select(*cols)
-    mat.release()
-    return out
+    return result.state.select(*ZIGZAG_IDS, *ZIGZAG_KEY)
 
 
 def bounded_sssp_csr(
@@ -236,80 +196,12 @@ def bounded_sssp_csr(
     num_blocks: Optional[int] = None,
     block_width: int = 1,
     max_iter: int = 10_000,
-    return_info: bool = False,
 ) -> DataFrame:
     """Block-centric variant of ``bounded_sssp`` (scalar cutoff, no sinks;
     the plain kernel covers the full parameter surface). Returns the same
-    converged state (qid, node, dist, prev, prev_dist); with
-    ``return_info=True`` returns ``(state, converged, iterations)`` so
-    callers can detect a ``max_iter`` exhaustion instead of silently
-    treating a truncated run as the fixpoint.
-
-    ``block_width``: ids are blocked by ``(id // block_width) % num_blocks``
-    — width 1 is a round-robin (hash-like) blocking; a larger width gives
-    RANGE blocking, which is what makes block-centric iteration pay off on
-    graphs whose id assignment preserves locality (crawl-order url ids,
-    dictionary-encoded host-sorted ids): intra-block chains collapse into
-    one superstep."""
-    if num_blocks is None:
-        num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    blk = lambda c: F.pmod(F.floor(F.col(c) / F.lit(block_width)), F.lit(num_blocks))  # noqa: E731
-    eb = edges_w.withColumn("_blk", blk("src"))
-    fn = _local_relax_factory(num_blocks, float(cutoff), block_width)
-    schema = "qid long, node long, dist double, prev long, prev_dist double"
-
-    # one Spark job per superstep: the state carries a ``_new`` frontier
-    # flag and the improved-row count rides the checkpoint action as an
-    # Observation metric (same pattern as bounded_sssp / PageRank / CC)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
-    cols = ["qid", "node", "dist", "prev", "prev_dist"]
-    mat = Materializer()
-    state = mat.materialize(seeds.select(*cols).withColumn("_new", F.lit(True)))
-    converged = False
-    iters = 0
-    for iters in range(1, max_iter + 1):
-        frontier = state.filter(F.col("_new")).select(*cols)
-        msgs = (
-            frontier.withColumn("_blk", blk("node"))
-            .groupBy("_blk")
-            .cogroup(eb.groupBy("_blk"))
-            .applyInPandas(fn, schema=schema)
-        )
-        best = (
-            msgs.groupBy("qid", "node")
-            .agg(F.min(F.struct("dist", "prev_dist", "prev")).alias("m"))
-            .select("qid", "node", "m.dist", "m.prev_dist", "m.prev")
-        )
-        old = state.select(
-            "qid", "node", F.struct("dist", "prev_dist", "prev").alias("_old")
-        )
-        improved = (
-            best.join(old, ["qid", "node"], "left")
-            .filter(
-                F.col("_old").isNull()
-                | (F.struct("dist", "prev_dist", "prev") < F.col("_old"))
-            )
-            .select(*cols)
-        )
-        obs = Observation()
-        state = mat.materialize(
-            state.join(improved.select("qid", "node"), ["qid", "node"], "left_anti")
-            .select(*cols)
-            .withColumn("_new", F.lit(False))
-            .unionByName(improved.withColumn("_new", F.lit(True)))
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt"),
-            )
-        )
-        if obs.get["cnt"] == 0:
-            converged = True
-            break
-    out = state.select(*cols)
-    mat.release()
-    if return_info:
-        return out, converged, iters
-    return out
+    converged state (qid, node, dist, prev, prev_dist); see
+    ``csr_fixpoint`` for ``block_width``."""
+    result = csr_fixpoint(
+        spark, edges_w, seeds, SSSP_BLOCK, cutoff, num_blocks, block_width, max_iter
+    )
+    return result.state.select(*SSSP_COLS)

@@ -17,9 +17,11 @@ transition system (:1425-1465):
 
 Spark shape: states encode as ``node*2 + (dir==+1)``; the transition
 system is materialized ONCE per graph as a ``state_edges(src, dst,
-weight)`` DataFrame (4 unions + flips); the same label-correcting
-superstep loop as the SSSP kernel runs over it, with per-query flip
-exclusion at the source.
+weight)`` DataFrame (4 unions + flips). ``zigzag_sssp`` runs the package's
+one fixpoint core, ``operators.sssp.label_fixpoint``, over it: ids
+``node``, key ``(dist, g, prev)``, relax = the state-edge join with the
+``g`` message projection (or, with ``use_csr``, the block relax of
+``operators.sssp_csr``), with per-query flip exclusion at the source.
 
 Tie-breaking: the reference keeps the first setter under heap+eager-flip
 event order. All non-flip zigzag edges cost 0, so we carry a derivation
@@ -41,6 +43,11 @@ from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
 from ..rounding import round_half_up
+from .sssp import label_fixpoint
+
+# zigzag_sssp's state: one label per doubled state, (dist, g, prev) tie-break
+ZIGZAG_IDS = ("node",)
+ZIGZAG_KEY = ("dist", "g", "prev")
 
 
 def state_id(node: int, direction: int) -> int:
@@ -107,6 +114,14 @@ def _graph_state_edges(graph: SparkDiGraph) -> DataFrame:
     return graph._zigzag_state_edges
 
 
+def zigzag_seeds(spark, seed_states: list[int]) -> DataFrame:
+    """Seed labels (node=state, dist=0, g=0, prev=-1) of ``seed_states``."""
+    return spark.createDataFrame(
+        [(s, 0.0, 0, -1) for s in seed_states],
+        "node long, dist double, g int, prev long",
+    )
+
+
 def zigzag_sssp(
     graph: SparkDiGraph,
     seed_states: list[int],
@@ -114,11 +129,11 @@ def zigzag_sssp(
     max_iter: int = 10_000,
     use_csr: bool = False,
 ) -> DataFrame:
-    """Label-correcting loop over the state graph with the (dist, g, prev)
+    """``label_fixpoint`` over the state graph with the (dist, g, prev)
     tie-break. Returns (node=state, dist, g, prev) — seeds excluded from
     prev-map semantics (prev = -1).
 
-    ``use_csr``: route through the block-centric local-fixpoint kernel
+    ``use_csr``: route through the block-centric local-fixpoint relax
     (operators/sssp_csr.zigzag_sssp_csr) — same converged labels (unique
     least fixpoint), far fewer global supersteps on 0-cost-dominated state
     graphs."""
@@ -130,24 +145,8 @@ def zigzag_sssp(
         from .sssp_csr import zigzag_sssp_csr
 
         return zigzag_sssp_csr(spark, se, seed_states, cutoff, max_iter=max_iter)
-    # one Spark job per superstep: ``_new`` frontier flag + Observation
-    # count on the single checkpoint action (pattern of bounded_sssp)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
-    cols = ["node", "dist", "g", "prev"]
-    mat = Materializer()
-    state = mat.materialize(
-        spark.createDataFrame(
-            [(s, 0.0, 0, -1) for s in seed_states],
-            "node long, dist double, g int, prev long",
-        ).withColumn("_new", F.lit(True))
-    )
-    # loop-invariant plan fragments (same driver-latency lever as
-    # bounded_sssp/PageRank: Columns are immutable and resolve by name;
-    # state columns node/dist/g and edge columns src/dst/weight/is_flip
-    # are unambiguous in the join)
+    # loop-invariant message fragments; frontier columns node/dist/g and
+    # edge columns src/dst/weight/is_flip are unambiguous in the join
     _msg_jcond = F.col("node") == F.col("src")
     _msg_proj = (
         F.col("dst").alias("node"),
@@ -158,40 +157,25 @@ def zigzag_sssp(
         F.col("src").alias("prev"),
     )
     _cut_filter = F.col("dist") <= cutoff
-    _cand_agg = F.min(F.struct("dist", "g", "prev")).alias("_cand")
-    _old_proj = ("node", F.struct("dist", "g", "prev").alias("_old"))
-    _better = F.col("_cand").isNotNull() & (
-        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
-    )
-    _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt")
-    for _ in range(max_iter):
-        # single full-outer merge of old state vs candidate minima (same
-        # rewrite as bounded_sssp: the former left-join + anti-join +
-        # union walked the state three times per superstep for the
-        # identical row set)
-        msgs = (
-            state.filter(F.col("_new"))
-            .select("node", "dist", "g")
+
+    def relax(frontier: DataFrame, i: int) -> DataFrame:
+        return (
+            frontier.select("node", "dist", "g")
             .join(se, _msg_jcond)
             .select(*_msg_proj)
             .filter(_cut_filter)
         )
-        best = msgs.groupBy("node").agg(_cand_agg)
-        obs = Observation()
-        state = mat.materialize(
-            state.select(*_old_proj)
-            .join(best, "node", "full")
-            .withColumn("_m", _merge)
-            .withColumn("_new", _better)
-            .select("node", "_m.dist", "_m.g", "_m.prev", "_new")
-            .observe(obs, _cnt_metric)
-        )
-        if obs.get["cnt"] == 0:
-            break
-    out = state.select(*cols)
-    mat.release()
-    return out
+
+    result = label_fixpoint(
+        spark,
+        zigzag_seeds(spark, seed_states),
+        ZIGZAG_IDS,
+        ZIGZAG_KEY,
+        relax,
+        max_iter=max_iter,
+        name="zigzag",
+    )
+    return result.state.select(*ZIGZAG_IDS, *ZIGZAG_KEY)
 
 
 @dataclass

@@ -89,6 +89,23 @@ def test_graph_auto_create_endpoint(spark):
     assert lm[g.node_id("a")] == 5.0
 
 
+def test_from_edge_df_null_vertex_length(spark):
+    """A NULL length falls back to default_length on edge endpoints and on
+    extra vertices that no edge touches alike."""
+    from networkx_graph_spark.graph import SparkDiGraph
+
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    vertices = spark.createDataFrame(
+        [(0, "a", None), (7, "lone", None), (8, "w", 3.0)],
+        "id long, node string, length double",
+    )
+    g = SparkDiGraph.from_edge_df(spark, edges, vertices, default_length=2.0)
+    assert g.vertex_length(0) == 2.0
+    assert g.vertex_length(7) == 2.0
+    assert g.vertex_length(8) == 3.0
+    assert g.lengths_map == {0: 2.0, 1: 2.0, 7: 2.0, 8: 3.0}
+
+
 def test_edges_w(graph1):
     ew = {(r["src"], r["dst"]): r["weight"] for r in graph1.edges_w.collect()}
     assert ew[(1, 2)] == 10.0  # weight = length(src)

@@ -2,6 +2,7 @@
 parquet scans (PLANS.md); scans that read every column for a 2-column
 projection are wrong at 100 TB."""
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -78,14 +79,19 @@ def _count_jobs(spark, fn):
     return actions
 
 
-def test_sssp_one_job_per_superstep(spark):
-    """The SSSP kernel must schedule exactly one Spark job per superstep
-    (+1 for the seed checkpoint): convergence count and p2p target hits
-    ride the state-checkpoint action as Observation metrics, never as
-    separate isEmpty/collect jobs."""
+def _chain_kernel(spark, kernel):
+    """A no-arg run of ``kernel`` over the weighted chain 0->1->...->6 from
+    node 0 (zigzag: from state (0, +1) over its state graph, built here so
+    the count covers the kernel alone)."""
+    from networkx_graph_spark.graph import SparkDiGraph
     from networkx_graph_spark.operators.sssp import bounded_sssp
+    from networkx_graph_spark.operators.sssp_csr import bounded_sssp_csr
+    from networkx_graph_spark.operators.zigzag import (
+        _graph_state_edges,
+        state_id,
+        zigzag_sssp,
+    )
 
-    # chain 0->1->...->6: 6 improving supersteps + 1 confirming round
     edges = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(6)], "src long, dst long, weight double"
     )
@@ -93,11 +99,38 @@ def test_sssp_one_job_per_superstep(spark):
         [(0, 0, 0.0, -1, float("-inf"))],
         "qid long, node long, dist double, prev long, prev_dist double",
     )
-    jobs = _count_jobs(
-        spark, lambda: bounded_sssp(spark, edges, seeds, cutoffs=100.0).collect()
+    if kernel == "bounded_sssp":
+        return lambda: bounded_sssp(spark, edges, seeds, cutoffs=100.0).collect()
+    if kernel == "bounded_sssp_csr":
+        return lambda: bounded_sssp_csr(spark, edges, seeds, 100.0).collect()
+    g = SparkDiGraph.from_edge_df(spark, edges)
+    _graph_state_edges(g)
+    return lambda: zigzag_sssp(g, [state_id(0, 1)], 100.0).collect()
+
+
+@pytest.mark.parametrize(
+    "kernel, supersteps",
+    [
+        # 6 improving supersteps + 1 confirming round
+        ("bounded_sssp", 7),
+        # round-robin blocks (width 1): every hop crosses a block boundary
+        ("bounded_sssp_csr", 7),
+        # each node costs two: (k, -1) by a 0-cost hop, then (k, +1) by its
+        # flip; 12 improving supersteps + 1 confirming round
+        ("zigzag_sssp", 13),
+    ],
+)
+def test_sssp_one_job_per_superstep(spark, kernel, supersteps):
+    """Every caller of the fixpoint core must schedule exactly one Spark
+    job per superstep (+1 for the seed checkpoint): convergence count and
+    p2p target hits ride the state-checkpoint action as Observation
+    metrics, never as separate isEmpty/collect jobs."""
+    jobs = _count_jobs(spark, _chain_kernel(spark, kernel))
+    # 1 seed checkpoint + supersteps + 1 final collect
+    want = supersteps + 2
+    assert jobs <= want, (
+        f"expected <={want} jobs (1 seed + {supersteps} supersteps + collect), got {jobs}"
     )
-    # 1 seed checkpoint + 7 supersteps + 1 final collect
-    assert jobs <= 9, f"expected <=9 jobs (1 seed + 7 supersteps + collect), got {jobs}"
 
 
 def test_pagerank_one_job_per_superstep(spark):
